@@ -1,20 +1,27 @@
 """Materialization strategy for shared and iterative intermediates.
 
-Local mode uses DataFrame.localCheckpoint: blocks live in this JVM's
-block manager (MEMORY_AND_DISK) — the right call on local[*], where
-there is exactly one process anyway. On a real cluster localCheckpoint
-is NOT fault-tolerant: blocks die with their executor, and a lost block
-kills every consumer of a shared intermediate or an iteration's whole
-lineage (which the checkpoint deliberately cut).
+The SparkContext's checkpoint directory is the one switch:
 
-Setting SPARK_GRAFT_CHECKPOINT_DIR to a fault-tolerant path (HDFS/S3 on
-a cluster; any directory in tests) switches every call site that
-materializes through here — the session memo (functions/memo.py) and
-the iterative kernels (functions/graph.py) — to reliable
-DataFrame.checkpoint into that directory. Same semantics (eager
-materialization, lineage cut), executor-loss-proof storage. The env var
-makes the cluster posture an executable switch rather than a docstring
-claim (tests/test_graph.py runs the graph family under it).
+- No checkpoint dir (the default): DataFrame.localCheckpoint. Blocks
+  live in the block manager (MEMORY_AND_DISK) — the right call on
+  local[*], where there is exactly one process anyway. On a real
+  cluster localCheckpoint is NOT fault-tolerant: blocks die with their
+  executor, and a lost block kills every consumer of a shared
+  intermediate or an iteration's whole lineage (which the checkpoint
+  deliberately cut).
+- A checkpoint dir set (Spark's own ``spark.checkpoint.dir``, read at
+  context creation — ``spark-submit --conf`` or
+  ``get_spark(extra_conf=...)``): reliable DataFrame.checkpoint into
+  that fault-tolerant store (HDFS/S3 on a cluster). Same lineage cut,
+  executor-loss-proof storage. Always EAGER: RDD.checkpoint() recomputes
+  the lineage a second time when writing the files unless the data is
+  already persisted, so a lazy reliable checkpoint would compute
+  everything twice.
+
+Every caller — the session memo (functions/memo.py), the iterative
+kernels (functions/graph.py) and the plan-level loops — goes through
+materialize(), so this is the only code that chooses between the two.
+The engine never sets the directory itself.
 
 Cleanup: localCheckpoint blocks are freed by the ContextCleaner when
 the superseded DataFrames are GC'd. Reliable checkpoint FILES are only
@@ -22,46 +29,19 @@ freed the same way because the session factory sets
 ``spark.cleaner.referenceTracking.cleanCheckpoints`` (session.py, read
 at context creation) — Spark's default leaves them on disk forever,
 which at the iterative kernels' one-checkpoint-per-round cadence means
-O(rounds x edges) of permanent storage on exactly the 100 TB posture
-this switch exists for.
+O(rounds x edges) of permanent storage.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-_DIR_SET_FOR: dict[str, str] = {}
 
-
-_READ_ENV = object()
-
-
-def materialize(
-    df: DataFrame, eager: bool = True, ckpt_dir=_READ_ENV
-) -> DataFrame:
-    """Checkpoint ``df`` eagerly (or lazily), reliable when
-    SPARK_GRAFT_CHECKPOINT_DIR is set, local otherwise.
-
-    ``ckpt_dir`` lets a caller pin the target it already resolved:
-    session_memo keys its cache by the directory it read, and a second
-    env read HERE could disagree if another thread repoints the var
-    between the two reads — the entry would then be served under one
-    target while its files live (and get pruned) under another
-    (code-review r15). Pass the resolved value (or None for local) to
-    make key and files agree by construction."""
-    if ckpt_dir is _READ_ENV:
-        ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if not ckpt_dir:
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage: a local checkpoint (eager or lazy, as asked)
+    when the context has no checkpoint dir, otherwise an eager reliable
+    checkpoint into it. ``eager=False`` is a local-path optimisation —
+    the first job that touches the result stores its blocks."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    app = sc.applicationId
-    # Track the directory VALUE per app, not just "was set": a caller
-    # that repoints the env var mid-session (test fixtures with per-test
-    # tmp dirs) must not keep writing into the first—possibly pruned—
-    # directory.
-    if _DIR_SET_FOR.get(app) != ckpt_dir or sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(ckpt_dir)
-        _DIR_SET_FOR[app] = ckpt_dir
-    return df.checkpoint(eager=eager)
+    return df.checkpoint(eager=True)

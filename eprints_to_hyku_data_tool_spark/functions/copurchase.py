@@ -7,14 +7,15 @@ l_orderkey, distinct pairs). Before round 6 each query rebuilt that edge
 set from scratch — a lineitem self-join + distinct per query, ~3 s of
 the sf0.1 suite each, identical bytes every time.
 
-This module materializes the graph ONCE per (SparkSession, sf_dir) with
-an eager localCheckpoint and hands every consumer the same checkpointed
-DataFrame — the multi-query analogue of the per-query localCheckpoint
-rule in functions/graph.py. At 100 TB this is exactly what a production
-pipeline does with a shared intermediate: write it once (here a
-checkpoint; on a cluster, a bucketed parquet table) and fan the
-downstream analyses out from the materialization instead of re-deriving
-the self-join per job.
+This module materializes the graph ONCE per (SparkSession, sf_dir)
+through the session memo (a localCheckpoint, or a reliable checkpoint
+when the context has a checkpoint dir) and hands every consumer the same
+checkpointed DataFrame — the multi-query analogue of the per-query
+localCheckpoint rule in functions/graph.py. At 100 TB this is exactly
+what a production pipeline does with a shared intermediate: write it
+once (here a checkpoint; on a cluster, a bucketed parquet table) and fan
+the downstream analyses out from the materialization instead of
+re-deriving the self-join per job.
 
 Memo keys include SparkContext.applicationId, so a stopped/recreated
 session (test fixtures) never sees another context's checkpoint blocks,
@@ -48,7 +49,8 @@ def _memo(spark, sf_dir, key, build, eager=True):
     # (r16): the triangle-stats entry stays eager, so ITS one build job
     # computes the whole chain and stores blocks at every cut — three
     # fewer count passes, identical blocks, and the full chain cost
-    # still lands in the timed _build_copurchase_graph entry.
+    # still lands in the timed _build_copurchase_graph entry. Local path
+    # only: with a checkpoint dir set, every entry is written eagerly.
     return session_memo(spark, sf_dir, f"copurchase:{key}", build, eager=eager)
 
 

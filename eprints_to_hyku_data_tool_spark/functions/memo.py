@@ -3,20 +3,20 @@
 Several query families analyze the same derived table (the co-purchase
 graph, the verified near-dup pair set). Each registered query must stay
 independently callable, so the sharing cannot live in the queries —
-it lives here: the first caller materializes the build with an eager
-localCheckpoint, later callers (same SparkContext, same sf_dir) get the
-SAME checkpointed DataFrame. On a cluster the equivalent is writing the
-intermediate once as a bucketed parquet table and fanning analyses out
-from it.
+it lives here: the first caller materializes the build through
+functions/checkpointing.materialize, later callers (same SparkContext,
+same sf_dir) get the SAME checkpointed DataFrame. On a cluster the
+equivalent is writing the intermediate once as a bucketed parquet table
+and fanning analyses out from it.
 
 Keys include SparkContext.applicationId so a stopped/recreated session
 (test fixtures) never sees another context's checkpoint blocks, the
-current materialization target (SPARK_GRAFT_CHECKPOINT_DIR or local) so
-a repointed checkpoint dir cannot serve frames backed by pruned files,
-and sf_dir so fixture tiers cannot collide (tests/test_graph.py pins
-these properties). Memory is bounded: one entry per (app, target,
-sf_dir, key); blocks are MEMORY_AND_DISK and are released by the
-ContextCleaner when the application ends.
+context's materialization target (its checkpoint dir, or local) so a
+frame backed by reliable-checkpoint files is never served once the
+context points elsewhere, and sf_dir so fixture tiers cannot collide
+(tests/test_memo.py pins these properties). Memory is bounded: one
+entry per (app, target, sf_dir, key); blocks are MEMORY_AND_DISK and
+are released by the ContextCleaner when the application ends.
 """
 
 from __future__ import annotations
@@ -53,20 +53,17 @@ def session_memo(
     materializations to the chain's final (eager) entry: the last
     phase's one job computes the whole chain, storing blocks at every
     lazy cut, instead of one count pass per phase (r16 — the copurchase
-    und/deg/oriented ladder). Only meaningful on the local path; under
-    SPARK_GRAFT_CHECKPOINT_DIR the materialize stays eager regardless
-    (a lazy reliable checkpoint recomputes lineage on file write), so
-    the flag quietly strengthens to eager there."""
-    import os
-
-    app = spark.sparkContext.applicationId
+    und/deg/oriented ladder). The key does not include ``eager``: on the
+    local path the FIRST build's flag wins for a key, and a later eager
+    caller of a lazily built entry gets blocks that the next job over
+    it stores. With a checkpoint dir set, materialize() is always
+    eager, so the flag has no effect there."""
+    sc = spark.sparkContext
+    app = sc.applicationId
     # The materialization TARGET is part of the identity (code-review
-    # r13): repointing SPARK_GRAFT_CHECKPOINT_DIR mid-application (the
-    # per-test tmp-dir pattern) must miss, not serve a DataFrame whose
-    # reliable-checkpoint files live in the old — possibly pruned —
-    # directory.
-    raw_tgt = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    tgt = raw_tgt or "<local>"
+    # r13): an entry whose reliable-checkpoint files live in one
+    # directory must not be served after the context points elsewhere.
+    tgt = sc.getCheckpointDir() or "<local>"
     with _LOCK:
         # Evict entries from other (stopped) applications or other
         # checkpoint targets: their DataFrames are unusable (or backed
@@ -81,13 +78,6 @@ def session_memo(
         k = (app, tgt, sf_dir, key)
         df = _MEMO.get(k)
         if df is None:
-            # Pass the SAME resolved target the key records — a second
-            # env read inside materialize() could disagree under a
-            # concurrent repoint, caching an entry whose backing files
-            # live in another (possibly pruned) directory
-            # (code-review r15).
-            df = materialize(
-                build(), eager=eager or raw_tgt is not None, ckpt_dir=raw_tgt
-            )
+            df = materialize(build(), eager=eager)
             _MEMO[k] = df
         return df

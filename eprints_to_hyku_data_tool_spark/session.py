@@ -13,6 +13,9 @@ scale posture depend on (SURVEY.md §4 config block).
   works in both directions, and SPARK_GRAFT_MASTER unpins the local
   master for spark-submit (both code-review r15: the old docstring
   claimed a posture the code did not implement).
+- Reliable checkpoints: set Spark's own ``spark.checkpoint.dir`` (via
+  ``extra_conf`` or ``spark-submit --conf``) to a fault-tolerant store;
+  functions/checkpointing.py switches on the context's checkpoint dir.
 """
 
 from __future__ import annotations
@@ -79,9 +82,9 @@ def get_spark(
         # vectorized reader rejects; read as long ns and convert in
         # sources.tables.load_table (data is us-precision, so exact).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Reliable checkpoint FILES (the SPARK_GRAFT_CHECKPOINT_DIR
-        # cluster posture — functions/checkpointing.py) are NOT cleaned
-        # by default: without this flag every per-round edge-set
+        # Reliable checkpoint FILES (the cluster posture: a context with
+        # spark.checkpoint.dir set — functions/checkpointing.py) are NOT
+        # cleaned by default: without this flag every per-round edge-set
         # checkpoint of an iterative kernel accumulates in the
         # checkpoint store for the life of the app and beyond. With it,
         # the ContextCleaner deletes a checkpoint's files once the
@@ -108,24 +111,20 @@ def get_spark(
         )
     # r16 cluster-config adjudication at the 10x tier (VERDICT r15 item
     # 6), interleaved min-of-3 per candidate:
-    # - preferSortMergeJoin=false: ADOPTED as an executable switch —
+    # - preferSortMergeJoin=false: a cluster win —
     #   association_rules 4.83 -> 3.88 s (won all 3 interleaved pairs),
     #   multikey_sort/corpus_pipeline flat. Guide §3.1/§9: shuffled hash
     #   join beats sort-merge when the per-partition build side fits.
     #   Default stays Spark's (true) so local plan pins and the bench
-    #   series stay comparable; set SPARK_GRAFT_PREFER_SMJ=false on a
-    #   cluster (or for A/Bs).
+    #   series stay comparable; pass
+    #   spark.sql.join.preferSortMergeJoin=false through extra_conf (or
+    #   spark.conf.set) on a cluster or for A/Bs.
     # - coalescePartitions.parallelismFirst=false: REJECTED —
     #   association_rules 5.75 -> 19.2 s, corpus_pipeline 4.0 -> 28.1 s
     #   (the 64 MB advisory collapses this tier's parallelism).
     # - io.compression.codec=zstd: REJECTED — corpus_pipeline 5.9 ->
     #   8.0 s in fresh-session pairs, association_rules tie; pure CPU
     #   cost where shuffle I/O is local disk, no network to save.
-    prefer_smj = os.environ.get("SPARK_GRAFT_PREFER_SMJ")
-    if prefer_smj is not None:
-        builder = builder.config(
-            "spark.sql.join.preferSortMergeJoin", prefer_smj
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -161,12 +160,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Same executable cluster switch as get_spark (see the adjudication
-    # note there); runtime-settable, so it applies to driver-owned
-    # sessions too.
-    prefer_smj = os.environ.get("SPARK_GRAFT_PREFER_SMJ")
-    if prefer_smj is not None:
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", prefer_smj)
     try:
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     except Exception:

@@ -5,6 +5,9 @@ graphs, and the fixture's real near-dup pair set."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -310,16 +313,25 @@ def test_graph_family_reads_shared_checkpoint_not_parquet(spark, sf_dir):
         assert "lineitem" not in p, (name, p)
 
 
-def test_reliable_checkpoint_switch(spark, sf_dir, tmp_path, monkeypatch):
-    """SPARK_GRAFT_CHECKPOINT_DIR switches the memo/iteration
+@pytest.fixture
+def clear_checkpoint_dir(spark):
+    """Yield the shared SparkContext and clear its checkpoint dir after
+    the test: left set, every later test would quietly run the reliable
+    path. SparkContext has no public unset, so reset the Scala field."""
+    sc = spark.sparkContext
+    yield sc
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+
+
+def test_reliable_checkpoint_switch(spark, tmp_path, clear_checkpoint_dir):
+    """The context's checkpoint dir switches the memo/iteration
     materializer from localCheckpoint to reliable DataFrame.checkpoint
     — the cluster fault-tolerance posture as an executable switch, not
     a docstring claim. Run a PageRank (iterative, checkpoints inside
     the loop) under the switch: results must be bit-identical to the
     local-checkpoint run and the checkpoint files must actually land in
     the directory."""
-    import os
-
     from eprints_to_hyku_data_tool_spark.functions.graph import pagerank
 
     edges = spark.createDataFrame(
@@ -328,12 +340,30 @@ def test_reliable_checkpoint_switch(spark, sf_dir, tmp_path, monkeypatch):
     base = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=5).collect()}
 
     ckpt = str(tmp_path / "reliable_ckpt")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckpt)
+    clear_checkpoint_dir.setCheckpointDir(ckpt)
     got = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=5).collect()}
     assert got == base  # identical FP sequence either way
     # the reliable store was actually written
     found = any(files for _, _, files in os.walk(ckpt))
     assert found, f"no checkpoint files under {ckpt}"
+
+
+def test_reliable_materialize_is_eager(spark, tmp_path, clear_checkpoint_dir):
+    """With a checkpoint dir set, materialize(eager=False) still writes
+    its files at the call, before any action: a lazy reliable checkpoint
+    would recompute the lineage when writing them. The plan-level loops
+    (BFS, k-means, pipeline stages) pass eager=False and rely on this."""
+    from eprints_to_hyku_data_tool_spark.functions.checkpointing import (
+        materialize,
+    )
+
+    ckpt = str(tmp_path / "reliable_ckpt")
+    clear_checkpoint_dir.setCheckpointDir(ckpt)
+    out = materialize(spark.range(100).withColumn("sq", F.col("id") ** 2),
+                      eager=False)
+    found = any(files for _, _, files in os.walk(ckpt))
+    assert found, f"no checkpoint files under {ckpt} before any action"
+    assert out.count() == 100
 
 
 def test_pagerank_empty_graph(spark):
@@ -400,7 +430,7 @@ def test_triangle_node_stats_matches_enumeration(spark, sf_dir):
 
 def test_session_cleans_reliable_checkpoints(spark):
     """code-review r14: without cleanCheckpoints, reliable checkpoint
-    FILES (the SPARK_GRAFT_CHECKPOINT_DIR posture) accumulate for the
+    FILES (a context with a checkpoint dir) accumulate for the
     life of the app — one O(edges) directory per iterative round. The
     session factory must pin the cleaner flag (context-creation config,
     not settable later)."""

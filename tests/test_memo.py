@@ -1,7 +1,8 @@
 """Unit tests for the session-scoped materialization memo.
 
-Uses stub sessions (only .sparkContext.applicationId is consulted) and a
-stubbed-out materialize so no JVM is needed: what's under test is the
+Uses stub sessions (only .sparkContext.applicationId and
+.sparkContext.getCheckpointDir() are consulted) and a stubbed-out
+materialize so no JVM is needed: what's under test is the
 keying and lifecycle policy, not Spark itself — same-key reuse,
 cross-sf_dir isolation, and the round-6 review fix that entries keyed to
 STOPPED applications are evicted on access instead of leaking forever in
@@ -20,7 +21,11 @@ from eprints_to_hyku_data_tool_spark.functions import memo as memo_mod
 
 
 def _fake_spark(app_id: str):
-    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+    # checkpoint_dir stands in for the context's setting; tests repoint
+    # it the way SparkContext.setCheckpointDir would.
+    sc = SimpleNamespace(applicationId=app_id, checkpoint_dir=None)
+    sc.getCheckpointDir = lambda: sc.checkpoint_dir
+    return SimpleNamespace(sparkContext=sc)
 
 
 def _with_identity_materialize(monkeypatch):
@@ -56,7 +61,6 @@ def test_sf_dir_and_key_isolated(monkeypatch):
 
 def test_stopped_app_entries_evicted(monkeypatch):
     _with_identity_materialize(monkeypatch)
-    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
     memo_mod._MEMO.clear()
     old = _fake_spark("app-old")
     memo_mod.session_memo(old, "/sf", "k1", object)
@@ -133,7 +137,7 @@ def test_concurrent_same_key_builds_once(monkeypatch):
 
 def test_repointed_checkpoint_dir_misses(monkeypatch):
     """code-review r13: the memo key carries the materialization target
-    — repointing SPARK_GRAFT_CHECKPOINT_DIR mid-application must
+    — repointing the context's checkpoint dir mid-application must
     rebuild, not serve a frame backed by the old (possibly pruned)
     directory."""
     _with_identity_materialize(monkeypatch)
@@ -145,11 +149,11 @@ def test_repointed_checkpoint_dir_misses(monkeypatch):
         calls.append(1)
         return object()
 
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/ckpt-a")
+    spark.sparkContext.checkpoint_dir = "/tmp/ckpt-a"
     a1 = memo_mod.session_memo(spark, "sf", "k", build)
     a2 = memo_mod.session_memo(spark, "sf", "k", build)
     assert a1 is a2 and len(calls) == 1
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/ckpt-b")
+    spark.sparkContext.checkpoint_dir = "/tmp/ckpt-b"
     b1 = memo_mod.session_memo(spark, "sf", "k", build)
     assert b1 is not a1 and len(calls) == 2
     # and the old-target entry was evicted, not pinned

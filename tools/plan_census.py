@@ -1,13 +1,25 @@
 """Whole-registry plan census on the final r16 tree (same format as
-plans/r15/plan_audit_before.json) + a diff against the r15 census."""
-import json, re, sys
-sys.path.insert(0, "/root/repo")
+plans/r15/plan_audit_before.json) + a diff against the r15 census.
+
+Run:  python tools/plan_census.py --sf-dir <fixture dir> \
+          [--out plans/r16/plan_audit_close.json]
+"""
+import argparse, json, os, re, sys
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 from eprints_to_hyku_data_tool_spark.session import get_spark
 from eprints_to_hyku_data_tool_spark.plans.registry import REGISTRY, _load_all
 
+ap = argparse.ArgumentParser()
+ap.add_argument("--sf-dir", required=True)
+ap.add_argument("--out",
+                default=os.path.join(_ROOT, "plans/r16/plan_audit_close.json"))
+args = ap.parse_args()
+
 spark = get_spark(app_name="plan_census", cpus=32)
 _load_all()
-sf = "/root/testdata/sf0.1"
+sf = args.sf_dir
 out = {}
 for name, spec in sorted(REGISTRY.items()):
     try:
@@ -39,11 +51,11 @@ for name, spec in sorted(REGISTRY.items()):
         "dup_udf": dup,
         "rddscan": len(re.findall(r"Scan ExistingRDD", p)),
     }
-with open("/root/repo/plans/r16/plan_audit_close.json", "w") as fh:
+with open(args.out, "w") as fh:
     json.dump(out, fh, indent=0, sort_keys=True)
     fh.write("\n")
 
-old = json.load(open("/root/repo/plans/r15/plan_audit_before.json"))
+old = json.load(open(os.path.join(_ROOT, "plans/r15/plan_audit_before.json")))
 cart = [n for n, v in out.items() if v.get("cartesian")]
 dup = [n for n, v in out.items() if v.get("dup_udf")]
 errs = [n for n, v in out.items() if "error" in v]
