@@ -183,35 +183,60 @@ def warm_session(spark: SparkSession, sf_dir: str, on_error=None) -> None:
     (bench.py and both of tools/adjudicate.py's fresh-session runners —
     code-review r14: three hand-kept copies had already diverged once,
     and the adjudicator's verdicts assume its sessions are warmed
-    EXACTLY like bench's): scan every table once through a noop sink
-    (JVM, parquet footers, every column) and run one trivial Arrow
-    pandas-UDF job to spin up the python workers.
+    EXACTLY like bench's).
+
+    - Tables: one ``noop`` scan per table warms the JVM, the parquet
+      footer and every column of every table.
+    - Python workers: one pandas-UDF job with one task per slot
+      (``defaultParallelism`` rows in as many partitions), enough to
+      fork a python worker for every slot.
+
+    The stages run concurrently, one thread each: every table scan is a
+    single-task job, so run one after another they leave the other
+    slots idle while python-worker start-up waits behind them. Each
+    thread runs through ``inheritable_thread_target``: a plain thread
+    starts with empty local properties, so its jobs would land outside
+    the caller's job group, out of reach of a group cancel and of
+    per-group accounting.
 
     ``on_error(stage, exc)`` makes failures non-fatal per stage (bench
-    must always print its one JSON line); the default re-raises.
+    must always print its one JSON line). Stages are the table names
+    and ``"arrow"``; a failing stage does not stop the others. With the
+    default ``None`` the first failure, in that order, is re-raised.
     """
+    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
+
+    from pyspark import inheritable_thread_target
     from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
 
     from .sources.tables import TABLES
 
-    for t in TABLES:
-        try:
-            df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-            df.count()
-            df.write.format("noop").mode("overwrite").save()
-        except Exception as exc:
-            if on_error is None:
-                raise
-            on_error(t, exc)
-    try:
-        @F.pandas_udf("long")
+    def _scan(table: str) -> None:
+        spark.read.parquet(f"{sf_dir}/{table}.parquet").write.format(
+            "noop"
+        ).mode("overwrite").save()
+
+    def _arrow() -> None:
+        @F.pandas_udf(LongType())
         def _warm(s: pd.Series) -> pd.Series:
             return s
 
-        spark.range(64).repartition(32).select(_warm("id")).write.format(
+        n = spark.sparkContext.defaultParallelism
+        spark.range(0, n, 1, n).select(_warm("id")).write.format(
             "noop"
         ).mode("overwrite").save()
-    except Exception as exc:
+
+    stages = {t: partial(_scan, t) for t in TABLES}
+    stages["arrow"] = _arrow
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+        futures = {s: pool.submit(inherit(fn)) for s, fn in stages.items()}
+    for stage, fut in futures.items():
+        exc = fut.exception()
+        if exc is None:
+            continue
         if on_error is None:
-            raise
-        on_error("arrow", exc)
+            raise exc
+        on_error(stage, exc)
